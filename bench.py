@@ -142,11 +142,13 @@ def _free_session_state(spark) -> None:
     Runs BETWEEN queries, never inside a timed region — each timed run
     still computes everything from the parquet inputs; this only stops
     query N's garbage from taxing query N+1. Methodology (timed region,
-    query set, best-of-3) unchanged."""
+    query set, best-of-3) unchanged. The unpersist blocks until the
+    blocks are gone, so the next query never starts beside a pending
+    removal."""
     spark.catalog.clearCache()
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for rid in list(jmap.keySet().toArray()):
-        jmap.get(rid).unpersist(False)
+        jmap.get(rid).unpersist(True)
 
 
 def _run_noop(spark, name: str, sf_dir: str) -> float:

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_table
+
 # Engine stop-word list. The reference ships a 319-entry lowercase CRLF file
 # (/root/reference/src/stop-word-list.txt, loaded with trim+lower at
 # WordCount.java:34). The engine treats stop words as data (any DataFrame can
@@ -102,7 +104,7 @@ def stopwords_df(spark, words=STOPWORDS) -> DataFrame:
     """Stop-word side table. The reference re-reads the HDFS file in every
     mapper's ``setup`` (WordCount.java:25-38); here it is a tiny DataFrame
     shipped once via a broadcast join."""
-    return spark.createDataFrame([(w,) for w in words], "word string")
+    return local_table(spark, [(w,) for w in words], "word string")
 
 
 def load_stopwords_file(spark, path: str) -> DataFrame:

@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 from ..operators import embeddings as EB
 from ..operators import similarity as S
 from ..plans.catalog import DEFAULT_SF_DIR, table
-from ..session import get_spark
+from ..session import get_spark, local_table
 
 
 def curate_embeddings(
@@ -113,9 +113,9 @@ def save_centroids(spark: SparkSession, cent, out_dir: str) -> None:
     make them write incompatible artifacts that load_centroids masks
     until serve time)."""
     rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(cent)]
-    spark.createDataFrame(rows, "cell int, centroid array<double>").write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/centroids")
+    local_table(
+        spark, rows, "cell int, centroid array<double>"
+    ).write.mode("overwrite").parquet(f"{out_dir}/centroids")
 
 
 def load_centroids(spark: SparkSession, out_dir: str) -> np.ndarray:
@@ -138,8 +138,8 @@ def save_codebooks(spark: SparkSession, codebooks, out_dir: str) -> None:
         for j in range(cb.shape[0])
         for c in range(cb.shape[1])
     ]
-    spark.createDataFrame(
-        rows, "sub int, cell int, centroid array<double>"
+    local_table(
+        spark, rows, "sub int, cell int, centroid array<double>"
     ).write.mode("overwrite").parquet(f"{out_dir}/pq_codebooks")
 
 
@@ -178,7 +178,7 @@ def save_rotation(spark: SparkSession, rotation, out_dir: str) -> None:
     to the rotated-ADC path)."""
     rr = np.asarray(rotation, dtype="float64")
     rows = [(int(i), [float(x) for x in rr[i]]) for i in range(rr.shape[0])]
-    spark.createDataFrame(rows, "row int, vec array<double>").write.mode(
+    local_table(spark, rows, "row int, vec array<double>").write.mode(
         "overwrite"
     ).parquet(f"{out_dir}/opq_rotation")
 
@@ -331,8 +331,8 @@ def main(argv: list[str] | None = None) -> None:
             rows = [(-1, [float(x) for x in mean])] + [
                 (i, [float(x) for x in c]) for i, c in enumerate(comps)
             ]
-            spark.createDataFrame(
-                rows, "row int, vec array<double>"
+            local_table(
+                spark, rows, "row int, vec array<double>"
             ).write.mode("overwrite").parquet(f"{args.out_dir}/pca")
         out = curate_embeddings(
             emb,

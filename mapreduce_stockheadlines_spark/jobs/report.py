@@ -27,7 +27,7 @@ from ..operators import dedup as D
 from ..operators import packing as PK
 from ..operators import textstats as TS
 from ..plans.catalog import DEFAULT_SF_DIR, parallel_table
-from ..session import get_spark
+from ..session import get_spark, local_table
 
 
 def _metric(df: DataFrame, name, value) -> DataFrame:
@@ -244,7 +244,7 @@ def corpus_report(
     # rest of the session
     rows = report.collect()
     stats.unpersist()
-    return docs.sparkSession.createDataFrame(rows, report.schema)
+    return local_table(docs.sparkSession, rows, report.schema)
 
 
 def _tokenizer_fertility_rows(
@@ -271,7 +271,7 @@ def _tokenizer_fertility_rows(
     spark = docs.sparkSession
     tot = sum(f for _, f in census)
     if tot == 0:
-        return spark.createDataFrame([], "metric string, value double")
+        return local_table(spark, [], "metric string, value double")
     merges, _alpha = B.train_bpe(docs, text_col, n_pieces, census=census)
     ranks = {pair: i for i, pair in enumerate(merges)}
     wp_vocab, _m, _a = WPo.train_wordpiece(
@@ -292,7 +292,8 @@ def _tokenizer_fertility_rows(
         sums["bpe"] += f * len(B._encode_word(w, ranks))
         sums["wordpiece"] += f * len(WPo._encode_word_wp(w, wset))
         sums["unigram"] += f * _uni_len(w)
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [
             (f"{name}_fertility", round(v / tot, 4))
             for name, v in sorted(sums.items())

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_array
+from ..session import local_table
 
 __all__ = [
     "word_census",
@@ -181,7 +182,8 @@ def bpe_vocabulary(
 ) -> DataFrame:
     """``piece_id_map`` as a (piece, piece_id) DataFrame."""
     ids = piece_id_map(merges, alphabet)
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         sorted(ids.items(), key=lambda kv: kv[1]),
         "piece string, piece_id int",
     )
@@ -340,12 +342,13 @@ def save_bpe(
     ``save_bigram_lm`` deployment shape: train once, encode many
     corpora): ``<path>/merges`` (rank, left, right) and
     ``<path>/alphabet`` (pos, symbol)."""
-    spark.createDataFrame(
+    local_table(
+        spark,
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, left string, right string",
     ).write.mode("overwrite").parquet(f"{path}/merges")
-    spark.createDataFrame(
-        list(enumerate(alphabet)), "pos int, symbol string"
+    local_table(
+        spark, list(enumerate(alphabet)), "pos int, symbol string"
     ).write.mode("overwrite").parquet(f"{path}/alphabet")
 
 

@@ -2716,10 +2716,11 @@ def decode_media(df: DataFrame, strict: bool = False) -> DataFrame:
             # detect_mime routes ANY RIFF/WAVE blob here, but only
             # 16-bit integer PCM decodes — float32/24-bit/ADPCM WAVs are
             # VALID files this tier cannot read, so non-strict mode must
-            # fall back to the stub rather than kill the task
+            # fall back to the stub rather than kill the task; NULL
+            # content (TypeError) falls back too, as in audio_profile
             try:
                 rate, nch, samples = audio(content)
-            except (ValueError, struct.error):
+            except (ValueError, struct.error, TypeError):
                 if strict:
                     raise
                 return _fake_decode(content)
@@ -3169,10 +3170,10 @@ def audio_profile(df: DataFrame, strict: bool = False) -> DataFrame:
     Arrow passes over the same planted WAVs). Column-for-column equal
     to the composition — same kernels (``_audio_feature``,
     ``_audio_spectral``, ``_audio_phash64``), same fallbacks
-    (undecodable/corrupt audio: digest-fake feature, NULL spectral,
-    digest phash; pinned in tests). Use the individual operators when
-    only one family is needed — this op pays all three kernels per
-    row."""
+    (undecodable/corrupt audio and NULL content: digest-fake feature,
+    NULL spectral, digest phash; pinned in tests). Use the individual
+    operators when only one family is needed — this op pays all three
+    kernels per row."""
 
     def profile_one(content, mime):
         audio = AUDIO_DECODERS.get(mime)

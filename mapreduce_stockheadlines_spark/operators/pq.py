@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double
+from ..session import local_table
 from .similarity import _collect_query_side, _nonempty_vecs
 
 ADC_FP_DP = 4  # fixed-point decimals for ADC lookup-table entries
@@ -606,7 +607,8 @@ def ivfpq_topk(
     norms[norms == 0.0] = 1.0
     q_mat = q_raw / norms
     probe_order = ivf_probe_cells(q_mat, cmat, n_probe)
-    probes = spark.createDataFrame(
+    probes = local_table(
+        spark,
         [
             (int(qid), int(c))
             for qid, row in zip(q_ids, probe_order)

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_table
+
 
 def count_by_key(df: DataFrame, key: str, count_col: str = "cnt") -> DataFrame:
     """O10+O11: hash-partition exchange + COUNT per key."""
@@ -129,7 +131,7 @@ def bucketed_row_number(
         list(df.select(*bucket_cols).schema)
         + [T.StructField("_offset", T.LongType(), False)]
     )
-    offsets = df.sparkSession.createDataFrame(rows, schema)
+    offsets = local_table(df.sparkSession, rows, schema)
     w = Window.partitionBy(*bucket_cols).orderBy(*order_by)
     return (
         df.join(F.broadcast(offsets), bucket_cols)

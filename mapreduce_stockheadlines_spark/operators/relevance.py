@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens_array, word_ngrams
+from ..session import local_table
 
 __all__ = [
     "term_frequencies",
@@ -157,8 +158,9 @@ def bm25_scores(
     )
     dfreq = doc_frequencies(tf, id_col)
     n = _n_docs(df, id_col).withColumn("_k", _zero_key("n_docs"))
-    qt = tf.sparkSession.createDataFrame(
-        [(t,) for t in sorted(set(query_terms))], ["term"]
+    qt = local_table(
+        tf.sparkSession, [(t,) for t in sorted(set(query_terms))],
+        "term string",
     )
     idf = (
         dfreq.join(F.broadcast(qt), "term")
@@ -772,8 +774,8 @@ def save_bigram_lm(
     ``<path>/meta`` (one row: v, add-k baked into the logps)."""
     lm.write.mode("overwrite").parquet(f"{path}/lm")
     ctx.write.mode("overwrite").parquet(f"{path}/ctx")
-    lm.sparkSession.createDataFrame(
-        [(int(vocab_size),)], "v long"
+    local_table(
+        lm.sparkSession, [(int(vocab_size),)], "v long"
     ).write.mode("overwrite").parquet(f"{path}/meta")
 
 

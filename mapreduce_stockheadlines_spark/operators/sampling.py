@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_table
+
 _BUCKETS = 16 ** 8  # first 8 hex chars of the digest
 
 
@@ -781,8 +783,10 @@ def save_dsir_ratios(
     row: n_buckets, salt — scoring MUST bucket with the same pair, so
     they travel with the table instead of trusting call sites)."""
     ratios.write.mode("overwrite").parquet(f"{path}/ratios")
-    ratios.sparkSession.createDataFrame(
-        [(int(n_buckets), salt)], "n_buckets long, salt string"
+    local_table(
+        ratios.sparkSession,
+        [(int(n_buckets), salt)],
+        "n_buckets long, salt string",
     ).write.mode("overwrite").parquet(f"{path}/meta")
 
 

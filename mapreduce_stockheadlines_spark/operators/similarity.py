@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, dot
+from ..session import local_table
 
 
 def _to_matrix(series: pd.Series) -> np.ndarray:
@@ -646,7 +647,8 @@ def ivf_topk(
     probe_order = np.argsort(
         -np.round(q_mat @ cent_mat.T, 4), axis=1, kind="stable"
     )[:, :n_probe]
-    probes = spark.createDataFrame(
+    probes = local_table(
+        spark,
         [
             (int(qid), int(c))
             for qid, row in zip(q_ids, probe_order)

@@ -7,7 +7,7 @@ path — and deterministic, so every one has a DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import (
@@ -16,6 +16,8 @@ from ..functions.text import (
     text_word_ngrams,
     tokens_array,
 )
+from ..session import local_table
+from .relevance import _zero_key
 
 # BPE-ish pre-tokenization: letter runs, digit runs, single non-space symbols
 # (a simplification of the GPT-2 pre-tokenizer split).
@@ -1194,7 +1196,24 @@ def url_stats(
     otherwise need to re-attach row metadata that already sits on the
     input (the ``pq_encode(keep_cols=)`` pattern; round 13: x24's
     domain cap re-derived the whole extraction just to pair ``domains``
-    with ``n_chars``)."""
+    with ``n_chars``). An entry that names an output column or
+    ``id_col``, repeats, or is missing from the input raises
+    ``ValueError`` instead of producing duplicate or unresolvable
+    columns."""
+    reserved = {"n_urls", "domains", "url_char_ratio", id_col}
+    for i, kc in enumerate(keep_cols):
+        if kc in reserved:
+            raise ValueError(
+                f"url_stats: keep_cols entry {kc!r} collides with a "
+                f"reserved output column ({sorted(reserved)})"
+            )
+        if kc in keep_cols[:i]:
+            raise ValueError(f"url_stats: keep_cols entry {kc!r} repeats")
+        if kc not in df.columns:
+            raise ValueError(
+                f"url_stats: keep_cols entry {kc!r} not in the input "
+                f"schema ({sorted(df.columns)})"
+            )
     urls = F.regexp_extract_all(F.col(text_col), F.lit(URL_PATTERN), 0)
     hosts = extract_url_hosts(text_col)
     url_len = F.aggregate(
@@ -1410,7 +1429,6 @@ def train_classifier(
     l2: float = 0.0,
     min_df: int = 2,
     quantize_dp: int | None = 12,
-    checkpoint_interval: int = 1,
 ) -> DataFrame:
     """Train the (token, weight) table ``classifier_score`` consumes —
     the TRAINING half of the CCNet/DCLM quality-filter stage (fastText
@@ -1422,28 +1440,33 @@ def train_classifier(
     Training is full-batch gradient descent on log-loss: per round,
     ``z_d = Σ x_{d,t}·w_t`` (x = token count / doc length), residual
     ``σ(z_d) − y_d``, gradient ``g_t = Σ_d resid_d·x_{d,t} / n_docs``
-    and update ``w ← w − lr·(g + l2·w)``. ``label_col`` must be 0/1.
-    Vocabulary is bounded to tokens appearing in ≥ ``min_df`` docs
-    (document-frequency census — the BPE-style bounded-model move);
-    docs containing no vocab token have zero gradient against every
-    weight and drop out harmlessly (their doc length still normalizes
-    nothing — they simply carry no vocab features).
+    and update ``w ← w − lr·(g + l2·w)``. ``label_col`` must be 0/1 and
+    ``id_col`` unique per doc. Vocabulary is bounded to tokens appearing
+    in ≥ ``min_df`` docs (document-frequency census — the BPE-style
+    bounded-model move). ``n_docs`` counts every doc with at least one
+    token; a doc with no vocab token has zero gradient against every
+    weight but still counts, and an empty doc drops out.
 
-    Scale shape (the PageRank contract applied to learning): the
-    (doc, token, x) feature stream is built ONCE from one tokenize +
-    explode + per-doc census and checkpointed; each round is two
-    equi-joins over it (token-keyed against the vocab-sized weight
-    table, doc-keyed against the doc-sized residuals) plus two
-    aggregations — no driver-side data, weight table vocab-sized,
-    lineage truncated every ``checkpoint_interval`` rounds (each round
-    references the weight table twice — once for scores, once in the
-    update join — so un-truncated plans double per round exactly like
-    PageRank's; the 2^interval re-expansion overtakes the saved
-    checkpoint jobs fast. Re-measured in round 12 on Spark 4.1.2 at 6
-    rounds/sf0.1: interval 1 beats 2 (6.5 vs 7.7-10.6 s across
-    orderings) — plan processing per job grew enough that the extra
-    checkpoint jobs are cheaper than the doubled plans, so 1 is now
-    the default).
+    Scale shape: the features are built ONCE — one row per doc,
+    ``(_id, _y, array<struct<token, _i, _x>>)`` restricted to the
+    vocabulary, from one tokenize + explode + census — and checkpointed.
+    ``_i`` is the token's 0-based rank in the sorted vocabulary, from one
+    row_number over the V vocabulary rows in one task. Round 0 needs no
+    weights (every weight starts at 0, so the residual is ``0.5 − y``).
+    Every later round broadcasts the previous weights as ONE row holding
+    an ``array<double>`` of length V, ordered by ``_i``, so each weight
+    lookup is a positional array read: O(1). A round costs O(nnz), plus
+    one O(V log V) sort of the V weights in one task to build the array.
+    (A ``map<token, w>`` lookup would be a linear scan over the map's
+    keys in Spark — O(nnz × V) a round.) The round computes ``z`` per doc
+    with ``aggregate`` over the feature array, and the gradient plus the
+    quantized update in ONE token-keyed groupBy — no doc-keyed shuffle.
+    The weight array is vocabulary-sized (8 bytes a token), the same bound
+    ``classifier_score``'s broadcast weight table relies on. Each round's
+    array is checkpointed and referenced once by the next round, so
+    lineage stays one round deep; the returned table is the last round
+    itself (an action on it runs that one round over the two
+    checkpoints).
 
     ``quantize_dp``: round weights to this many decimals each round.
     Distributed (and cross-library) float sums reorder run-to-run at
@@ -1454,50 +1477,104 @@ def train_classifier(
     """
     if n_iters < 1:
         raise ValueError("train_classifier: n_iters must be >= 1")
-    if checkpoint_interval < 1:
-        raise ValueError("train_classifier: checkpoint_interval must be >= 1")
     toks = df.select(
         F.col(id_col).alias("_id"),
         F.col(label_col).cast("double").alias("_y"),
         F.explode(tokens_array(text_col)).alias("token"),
     )
     counts = toks.groupBy("_id", "_y", "token").agg(F.count("*").alias("_c"))
-    lens = counts.groupBy("_id").agg(F.sum("_c").alias("_len"))
+    # count_if(_c > 0) reads `_c`, so this side keeps the same census
+    # subtree as the join's other side and reuses its exchange (a bare
+    # count(*) lets the optimizer prune `_c` and re-run the census)
     vocab = (
         counts.groupBy("token")
-        .agg(F.count("*").alias("_df"))
+        .agg(F.count_if(F.col("_c") > 0).alias("_df"))
         .filter(F.col("_df") >= min_df)
-        .select("token")
-    )
-    feats = (
-        counts.join(lens, "_id")
-        .join(vocab, "token", "left_semi")
         .select(
-            "_id", "_y", "token",
-            (F.col("_c") / F.col("_len")).alias("_x"),
+            "token",
+            (F.row_number().over(Window.orderBy("token")) - 1).alias("_i"),
         )
+    )
+    docs_seen = Observation()
+    feats = (
+        counts.join(F.broadcast(vocab), "token", "left")
+        .groupBy("_id", "_y")
+        .agg(
+            F.sum("_c").alias("_len"),
+            # collect_list skips the NULLs: out-of-vocab tokens leave
+            # the array but still count in the doc length
+            F.collect_list(
+                F.when(F.col("_i").isNotNull(), F.struct("token", "_i", "_c"))
+            ).alias("_tc"),
+        )
+        .select(
+            "_id",
+            "_y",
+            F.transform(
+                "_tc",
+                lambda e: F.struct(
+                    e["token"].alias("token"),
+                    e["_i"].alias("_i"),
+                    (e["_c"] / F.col("_len")).alias("_x"),
+                ),
+            ).alias("_f"),
+        )
+        # n_docs is counted by the checkpoint job itself, not a second one
+        .observe(docs_seen, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    n_docs = lens.count()
+    n_docs = docs_seen.get["n"]
     if n_docs == 0:
-        return df.sparkSession.createDataFrame([], "token string, weight double")
+        return local_table(df.sparkSession, [], "token string, weight double")
 
-    weights = vocab.withColumn("_w", F.lit(0.0)).localCheckpoint()
+    e = F.col("_e")
     for it in range(n_iters):
-        zd = (
-            feats.join(weights, "token")
-            .groupBy("_id", "_y")
-            .agg(F.sum(F.col("_x") * F.col("_w")).alias("_z"))
-        )
-        resid = zd.select(
-            "_id",
-            (
-                F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("_z"))) - F.col("_y")
-            ).alias("_r"),
-        )
+        if it == 0:
+            # every weight starts at 0, so σ(z) − y = 0.5 − y
+            scored = feats.select(
+                "_f", (F.lit(0.5) - F.col("_y")).alias("_r")
+            )
+            w_t = F.lit(0.0)
+        else:
+            # the weights as one array indexed by _i: a positional read
+            # per lookup (a map<token, w> lookup scans the keys)
+            wvec = (
+                weights.agg(
+                    F.transform(
+                        F.sort_array(F.collect_list(F.struct("_i", "_w"))),
+                        lambda s: s["_w"],
+                    ).alias("_m")
+                )
+                .withColumn("_k", F.lit(0))
+                .localCheckpoint()
+            )
+            m = F.col("_m")
+            z = F.aggregate(
+                "_f", F.lit(0.0), lambda acc, x: acc + x["_x"] * m[x["_i"]]
+            )
+            # equi-join on an all-zero key, not a crossJoin: the one-row
+            # attach stays a BroadcastHashJoin (relevance._zero_key)
+            scored = (
+                feats.withColumn("_k", _zero_key("_id"))
+                .join(F.broadcast(wvec), "_k")
+            ).select(
+                "_f",
+                (F.lit(1.0) / (F.lit(1.0) + F.exp(-z)) - F.col("_y")).alias(
+                    "_r"
+                ),
+                "_m",
+            )
+            w_t = m[e["_i"]]
         grad = (
-            feats.join(resid, "_id")
-            .groupBy("token")
+            scored.select(F.explode("_f").alias("_e"), "*")
+            .select(
+                e["token"].alias("token"),
+                e["_i"].alias("_i"),
+                w_t.alias("_w"),
+                e["_x"].alias("_x"),
+                "_r",
+            )
+            .groupBy("token", "_i", "_w")
             .agg(
                 (F.sum(F.col("_x") * F.col("_r")) / F.lit(float(n_docs))).alias(
                     "_g"
@@ -1509,11 +1586,7 @@ def train_classifier(
         )
         if quantize_dp is not None:
             new_w = F.round(new_w, quantize_dp)
-        weights = weights.join(grad, "token", "left").select(
-            "token", new_w.alias("_w")
-        )
-        if (it + 1) % checkpoint_interval == 0 or it == n_iters - 1:
-            weights = weights.localCheckpoint()
+        weights = grad.select("token", "_i", new_w.alias("_w"))
     return weights.select("token", F.col("_w").alias("weight"))
 
 
@@ -1642,7 +1715,6 @@ def domain_frequency_cap(
     """
     if cap < 1:
         raise ValueError("domain_frequency_cap: cap must be >= 1")
-    from pyspark.sql import Window
 
     order = [F.col(id_col).asc()]
     if order_col is not None:

@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_table
 from .bpe import word_census
 
 LOGP_FP = 10**6
@@ -373,7 +374,8 @@ def unigram_vocabulary(spark, model: dict[str, int]) -> DataFrame:
     """``unigram_piece_id_map`` as a (piece, piece_id, logp_fp) frame —
     the persistable artifact form."""
     ids = unigram_piece_id_map(model)
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         sorted(
             ((p, i, model[p]) for p, i in ids.items()),
             key=lambda row: row[1],

@@ -47,6 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_table
 from .bpe import word_census
 
 __all__ = [
@@ -310,8 +311,8 @@ def save_wordpiece(spark, vocab: list[str], path: str) -> None:
     (the save_bpe/save_bigram_lm deployment shape: train once, encode
     many corpora): ``<path>/vocab`` (ord, piece) — ord is the encoding
     table's order (alphabet then merges), which the fingerprint hashes."""
-    spark.createDataFrame(
-        list(enumerate(vocab)), "ord int, piece string"
+    local_table(
+        spark, list(enumerate(vocab)), "ord int, piece string"
     ).write.mode("overwrite").parquet(f"{path}/vocab")
 
 

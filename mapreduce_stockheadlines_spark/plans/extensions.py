@@ -30,6 +30,7 @@ from ..operators import similarity as S
 from ..operators import packing as PK
 from ..operators import skew as SK
 from ..operators import textstats as TS
+from ..session import local_table
 from .catalog import parallel_table, table
 from .core import QuerySpec
 
@@ -2927,8 +2928,8 @@ def x24_url_curation(
             F.lit("")
         ),
     )
-    blocklist = spark.createDataFrame(
-        [(d,) for d in _X24_BLOCKLIST], ["domain"]
+    blocklist = local_table(
+        spark, [(d,) for d in _X24_BLOCKLIST], "domain string"
     )
     # ONE extraction subtree (round 13 — VERDICT r12 #4, guide §2.4).
     # url_stats (the URL regex + host + PSL registered-domain pipeline)
@@ -2981,13 +2982,14 @@ def x24_url_curation(
             F.lit("https://"), rdom, _x24_robots_path(did)
         ).alias("rurl"),
     )
-    robots_pub = spark.createDataFrame(
+    robots_pub = local_table(
+        spark,
         [
             (f"newshub{k}.com", _x24_robots_body(k))
             for k in range(13)
             if _x24_robots_body(k) is not None
         ],
-        ["domain", "robots_txt"],
+        "domain string, robots_txt string",
     )
     rallow = RB.filter_robots_disallowed(
         rfront,
@@ -3734,7 +3736,8 @@ def x27_quantize_embeddings(
             )
             for m in range(len(q0))
         ]
-        om = spark.createDataFrame(
+        om = local_table(
+            spark,
             om_rows, "m64o int, opq_xmom_ii double, opq_xmom_ij double"
         )
         _mark(_stage_secs, "opq_moment", t0)
@@ -3867,7 +3870,8 @@ def x27_quantize_embeddings(
             )
             for m in range(len(mean))
         ]
-        pm = spark.createDataFrame(
+        pm = local_table(
+            spark,
             pm_rows,
             "m64 int, pca_mean_i double, pca_var_i double, pca_cov_ij double",
         )

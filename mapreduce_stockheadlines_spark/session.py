@@ -11,9 +11,16 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# Generated-code classes kept compiled per session. One pass over the
+# whole query registry (sf0.001, local[4]) compiles ~1460 distinct
+# classes and x33 + x28 alone ~260, while Spark's default keeps 100, so
+# every warm pass recompiled them. 2000 holds the full registry pass
+# with a ~35% margin.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(
@@ -26,6 +33,11 @@ def get_spark(
 
     On a real cluster ``master`` comes from spark-submit; locally we default
     to ``local[$SPARK_GRAFT_CPUS]``.
+
+    ``spark.sql.codegen.cache.maxEntries`` (``CODEGEN_CACHE_ENTRIES``) is a
+    static conf: it only takes effect on a session built here, and
+    ``apply_runtime_conf`` cannot set it on a session someone else
+    created.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -51,6 +63,13 @@ def get_spark(
         # threshold-tuning hook; plan shape pinned in tests/test_plans.py).
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+        )
+        # AQE numbers whole-stage-codegen stages in the order their
+        # inputs finish, which varies run to run; with the number in the
+        # class name, the same pipeline misses the codegen cache
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config(
             "spark.sql.shuffle.partitions",
@@ -62,6 +81,43 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_table(
+    spark: SparkSession, rows, schema: T.StructType | str
+) -> DataFrame:
+    """A small driver-built table (``rows``: tuples, lists, dicts or
+    ``Row``s) as a DataFrame, shipped through Arrow.
+
+    ``createDataFrame(<list>)`` pickles the rows into a Python RDD, so
+    every action over the table forks Python workers just to unpickle
+    it. This keeps ``createDataFrame``'s per-row type verification, then
+    builds a ``pyarrow.Table`` whose batches the JVM reads directly: the
+    plan gets a ``LocalTableScan`` and no Python worker runs. ``schema``
+    is a ``StructType`` or a DDL string (``"word string, n long"``).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = (
+        schema if isinstance(schema, T.StructType)
+        else T._parse_datatype_string(schema)
+    )
+    verify = T._make_type_verifier(struct)
+    to_tuple = T._create_converter(struct)
+    tuples = []
+    for row in rows:
+        verify(row)
+        # internal form (dates as days, timestamps as epoch micros) keeps
+        # createDataFrame's datetime semantics exactly
+        tuples.append(struct.toInternal(to_tuple(row)))
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*tuples)) or [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def enable_runtime_filtering(

@@ -34,6 +34,7 @@ from ..operators.textstats import (
     fix_mojibake as _fix_mojibake_col,
     text_stats,
 )
+from ..session import local_table
 
 _NEARDUP_HASHES = 8
 _NEARDUP_BANDS = 4
@@ -126,8 +127,8 @@ def _winnow_params_check(
     fs, jvm = _fs(spark, pdir)
 
     def _stamp():
-        spark.createDataFrame(
-            [(int(k), int(w), cap)], "k int, w int, max_per_doc int"
+        local_table(
+            spark, [(int(k), int(w), cap)], "k int, w int, max_per_doc int"
         ).coalesce(1).write.mode("overwrite").parquet(pdir)
 
     p = jvm.org.apache.hadoop.fs.Path(pdir)
@@ -355,7 +356,8 @@ def curated_ingest_sink(
             # batch_id rides on the partition directory (like the index
             # writes) — a data column with the same name would collide
             # with the inferred partition column on read
-            spark.createDataFrame(
+            local_table(
+                spark,
                 [(float(row["js_divergence"]), float(row["vocab_jaccard"]),
                   bool(breached))],
                 "js_divergence double, vocab_jaccard double,"
@@ -366,8 +368,8 @@ def curated_ingest_sink(
             if breached:
                 return
         if blocked_domains:
-            bl = spark.createDataFrame(
-                [(d,) for d in blocked_domains], ["domain"]
+            bl = local_table(
+                spark, [(d,) for d in blocked_domains], "domain string"
             )
             batch_df = filter_blocked_domains(batch_df, id_col, text_col, bl)
         hashed = batch_df.withColumn(
@@ -530,8 +532,10 @@ def curated_ingest_sink(
             # model-gate stage: weight table (tiny — broadcast inside
             # classifier_score) or the hashed stand-in model
             wtab = (
-                batch_df.sparkSession.createDataFrame(
-                    list(clf_weights), ["token", "weight"]
+                local_table(
+                    batch_df.sparkSession,
+                    [(t, float(w)) for t, w in clf_weights],
+                    "token string, weight double",
                 )
                 if clf_weights
                 else None

@@ -3613,6 +3613,30 @@ def test_audio_profile_matches_three_operator_composition(spark):
         assert p.phash == ph[mid].phash, mid
 
 
+def test_audio_null_content_falls_back_in_decode_and_profile(spark):
+    """NULL content under a WAV mime: the audio decoder raises
+    TypeError, and decode_media's audio tier and audio_profile both
+    fall back to the stub (no task failure in non-strict mode) with
+    the same columns; strict mode still raises."""
+    from mapreduce_stockheadlines_spark.operators import multimodal as M
+
+    df = spark.createDataFrame(
+        [(1, None, M.MIME_WAV)], "media_id long, content binary, mime string"
+    )
+    dec = M.decode_media(df).first()
+    prof = M.audio_profile(df).first()
+    assert (dec.n_bytes, dec.width, dec.height, dec.n_frames) == (0, 0, 0, 0)
+    assert dec.feature == []
+    assert (prof.n_bytes, prof.width, prof.height, prof.n_frames) == (
+        0, 0, 0, 0,
+    )
+    assert prof.feature == dec.feature
+    assert prof.spec_centroid_hz is None and prof.phash == 0
+    for op in (M.decode_media, M.audio_profile):
+        with pytest.raises(Exception, match="TypeError|NoneType"):
+            op(df, strict=True).collect()
+
+
 def test_audio_spectral_features_degenerate_inputs(spark):
     """Silence and a truncated WAV: silence yields all-zeros (never
     NaN), an undecodable blob NULLs in non-strict mode."""

@@ -459,6 +459,9 @@ def test_train_classifier_matches_reference_and_learns(spark):
         else:
             rows.append((i, 0, f"spam casino pills click v{i % 5} text"))
     rows.append((99, 1, ""))  # empty doc: no tokens, drops out harmlessly
+    # every token out of vocabulary (df 1 < min_df): no features, but the
+    # doc still counts in n_docs and so scales every gradient
+    rows.append((98, 0, "zzqx vvqk zzqx"))
 
     df1 = spark.createDataFrame(rows, "doc_id long, label int, text string")
     got = {
@@ -469,6 +472,17 @@ def test_train_classifier_matches_reference_and_learns(spark):
     }
     want = _ref_train_classifier(rows, n_iters=15)
     assert got == want  # bitwise, not approx: the quantized recurrence
+    assert "zzqx" not in got
+    assert got != _ref_train_classifier(rows[:-1], n_iters=15)
+
+    got_l2 = {
+        r.token: r.weight
+        for r in train_classifier(
+            df1.repartition(3), "doc_id", "text", "label", n_iters=8, l2=0.1
+        ).collect()
+    }
+    assert got_l2 == _ref_train_classifier(rows, n_iters=8, l2=0.1)
+    assert got_l2 != _ref_train_classifier(rows, n_iters=8)
 
     got16 = {
         r.token: r.weight
@@ -495,6 +509,22 @@ def test_train_classifier_matches_reference_and_learns(spark):
         for r in classifier_score(held, "doc_id", "text", weights=wtab).collect()
     }
     assert scores[1] > 0.6 > 0.4 > scores[2]
+
+
+def test_train_classifier_no_tokens_returns_empty_table(spark):
+    """A corpus with no tokens at all (empty and NULL texts) counts
+    n_docs = 0 in the feature checkpoint and returns an empty
+    (token, weight) table instead of dividing by zero."""
+    from mapreduce_stockheadlines_spark.operators.textstats import (
+        train_classifier,
+    )
+
+    df = spark.createDataFrame(
+        [(1, 1, ""), (2, 0, None)], "doc_id long, label int, text string"
+    )
+    w = train_classifier(df, "doc_id", "text", "label", n_iters=2)
+    assert w.columns == ["token", "weight"]
+    assert w.collect() == []
 
 
 def test_train_classifier_cli_roundtrip(spark, tmp_path):
@@ -682,6 +712,32 @@ def test_url_stats_keep_cols_passthrough(spark):
     }
     assert (out[0].n_chars, out[1].n_chars) == (7, 9)
     assert out[0].domains == ["example.com"]
+
+
+def test_url_stats_keep_cols_validation(spark):
+    """keep_cols= rejects output-name and id_col collisions, repeats and
+    missing columns up front (the pq_encode keep_cols contract)."""
+    import pytest
+
+    from mapreduce_stockheadlines_spark.operators.textstats import url_stats
+
+    df = spark.createDataFrame(
+        [(0, "x https://a.example.com/p", 7, 3)],
+        "doc_id long, text string, n_chars long, n_urls int",
+    )
+    for bad, msg in (
+        (("n_urls",), "reserved"),
+        (("domains",), "reserved"),
+        (("url_char_ratio",), "reserved"),
+        (("doc_id",), "reserved"),
+        (("n_chars", "n_chars"), "repeats"),
+        (("nope",), "not in the input"),
+    ):
+        with pytest.raises(ValueError, match=msg):
+            url_stats(df, "doc_id", "text", keep_cols=bad)
+    # the text column itself may ride along
+    row = url_stats(df, "doc_id", "text", keep_cols=("text",)).first()
+    assert row.text == "x https://a.example.com/p"
 
 
 def test_gopher_rules_hand_values(spark):
