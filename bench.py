@@ -8,6 +8,12 @@ Each query is executed to completion via the noop sink (all columns
 computed, no output cost) — ``count()`` would let Catalyst prune the plan
 and overstate throughput.
 
+``stage_secs`` gives, for every headline query, the wall time of each
+named stage of its fastest timed run: the builders tag their eager
+sections through ``stages.stage``, the final write is tagged
+``execute``, and the walls are read back from Spark's status store
+(``stages.stage_walls``) after each run, outside the timed region.
+
 Drift control (round 9 — VERDICT r8 #4: round-8's untouched queries
 read +17% purely from machine drift, so absolute cross-round deltas
 need an in-run baseline): the artifact also carries
@@ -34,6 +40,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mapreduce_stockheadlines_spark.plans.registry import ALL_QUERIES
 from mapreduce_stockheadlines_spark.session import get_spark
+from mapreduce_stockheadlines_spark.stages import (
+    last_job_id,
+    stage,
+    stage_walls,
+)
 
 HEADLINE_QUERIES = [
     "q01_filter_project",
@@ -78,28 +89,6 @@ HEADLINE_QUERIES = [
 ]
 
 
-# Fat multi-stage x-queries (VERDICT r9 "What's wrong" #1): one extra
-# attribution pass each — the builders accept a _stage_secs sink and
-# record the wall time of their EAGER sections (collects,
-# localCheckpoints, unrolled trainer rounds); the lazy assembly's cost
-# lands in the "execute" entry. Cross-round deltas on these queries
-# attribute to a named stage instead of requiring commit archaeology.
-# Round 11 (VERDICT r10 #2): every query above ~3 s at sf0.1 is staged —
-# the purely-LAZY ones (x08/x13/x24) attribute via component sub-plan
-# probes (plans/extensions._probe), whose walls overlap (shared scan)
-# rather than partition "execute".
-STAGED_QUERIES = [
-    "x08_text_stats",
-    "x13_multimodal_pipeline",
-    "x18_ivf_topk",
-    "x24_url_curation",
-    "x27_quantize_embeddings",
-    "x28_lm_perplexity",
-    "x31_pagerank",
-    "x32_sampling",
-]
-
-
 # Fixed in-run drift controls: code untouched since round 7, spanning
 # the scan-bound (q01), tokenize/explode (q13) and iterative-many-
 # short-stages (x31) regimes the suite is sensitive to.
@@ -138,7 +127,7 @@ def _free_session_state(spark) -> None:
     otherwise only freed when GC happens to collect the Python/JVM
     references, so a long bench run accumulates dead blocks and later
     queries pay their memory pressure (measured r12: x27 execute 3.7 s
-    timed vs 9.2 s in the attribution pass at the end of the run).
+    timed vs 9.2 s in an untimed pass at the end of the run).
     Runs BETWEEN queries, never inside a timed region — each timed run
     still computes everything from the parquet inputs; this only stops
     query N's garbage from taxing query N+1. Methodology (timed region,
@@ -204,6 +193,7 @@ def main() -> None:
     control_first = _time_controls(spark, sf_dir)
 
     timings: dict[str, float] = {}
+    stage_secs: dict[str, dict[str, float]] = {}
     total = 0.0
     for name in HEADLINE_QUERIES:
         spec = ALL_QUERIES[name]
@@ -214,25 +204,20 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         best = float("inf")
         for _ in range(3):  # best-of-3: damp GC/JIT noise in the measurement
+            first_job = last_job_id(spark) + 1
             t0 = time.time()
-            spec.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
+            df = spec.builder(spark, sf_dir)
+            with stage(spark, "execute"):
+                df.write.format("noop").mode("overwrite").save()
+            dt = time.time() - t0
+            # read back per run: a run of x31 launches ~300 jobs, so three
+            # runs' windows would not all stay in the status store
+            walls = stage_walls(spark, first_job, last_job_id(spark))
+            if dt < best:
+                best, stage_secs[name] = dt, walls
         dt = round(best, 3)
         timings[name] = dt
         total += dt
-        _free_session_state(spark)
-
-    # per-stage attribution pass for the fat x-queries (single run —
-    # these are attribution hints for cross-round adjudication, not
-    # headline numbers; the headline timing above stays best-of-3)
-    stage_secs: dict[str, dict[str, float]] = {}
-    for name in STAGED_QUERIES:
-        stages: dict[str, float] = {}
-        df = ALL_QUERIES[name].builder(spark, sf_dir, _stage_secs=stages)
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        stages["execute"] = round(time.time() - t0, 3)
-        stage_secs[name] = stages
         _free_session_state(spark)
 
     # drift control, last bracket + the Spark-independent DuckDB probe

@@ -27,14 +27,6 @@ def join(
     return left.join(r, on, how)
 
 
-def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    return left.join(right, on, "left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
-    return left.join(right, on, "left_anti")
-
-
 def aggregate(
     df: DataFrame, keys: list[str], aggs: dict[str, Column]
 ) -> DataFrame:
@@ -44,32 +36,12 @@ def aggregate(
     return df.groupBy(*keys).agg(*exprs)
 
 
-def topk(df: DataFrame, order: list[Column], k: int) -> DataFrame:
-    """orderBy + limit → TakeOrderedAndProject (per-partition heaps, no
-    global sort) — the distributed top-k the reference lacked."""
-    return df.orderBy(*order).limit(k)
-
-
 def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.unionByName(b)
 
 
 def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.intersect(b)
-
-
-def except_(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Multiset EXCEPT ALL (left multiplicities minus right's)."""
-    return a.exceptAll(b)
-
-
-def except_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
-    """SQL EXCEPT (DISTINCT): distinct rows of ``a`` not present in ``b``.
-
-    Correct even when ``a`` has duplicate rows — ``exceptAll(b).distinct()``
-    is NOT: a row appearing 3x left and 1x right survives the multiset
-    subtraction and the trailing distinct, where SQL EXCEPT drops it."""
-    return a.subtract(b)
 
 
 def having(df_grouped: DataFrame, predicate: Column) -> DataFrame:

@@ -31,27 +31,9 @@ from ..operators import packing as PK
 from ..operators import skew as SK
 from ..operators import textstats as TS
 from ..session import local_table
+from ..stages import stage
 from .catalog import parallel_table, table
 from .core import QuerySpec
-
-
-def _mark(sink: "dict | None", name: str, t0: float) -> float:
-    """Stage attribution for the fat x-queries (round-10 — VERDICT r9
-    'What's wrong' #1: per-operator wall time stopped being observable
-    from BENCH once x27/x28/x31/x32 grew multiple co-trained stages).
-    The trainers run EAGERLY inside these builders (collects,
-    localCheckpoints, unrolled Lloyd/EM rounds), so attribution has to
-    happen here: record the wall time since ``t0`` under ``name`` when
-    a sink dict is passed (bench.py's stage pass) and return a fresh
-    t0. The registry/driver path passes no sink — two clock reads of
-    overhead, no behavior change. The lazy assembly's cost lands in
-    bench's ``execute`` entry."""
-    import time
-
-    now = time.time()
-    if sink is not None:
-        sink[name] = round(now - t0, 3)
-    return now
 
 
 def _overlap(*thunks):
@@ -71,28 +53,49 @@ def _overlap(*thunks):
     but dump_plans normalizes ids by first appearance in the final plan
     text, which is thread-invariant.
 
+    Job tags: each thunk's thread starts with the caller's tags (so a
+    ``stage`` opened around this call covers every thunk's jobs) plus
+    one tag of its own. When a thunk raises, thunks not yet started are
+    dropped and the jobs of those still running are cancelled by their
+    tag (``cancelJobsWithTag``), repeatedly until they return, so a
+    sibling between two actions cannot start a fresh corpus-scale job;
+    then the first error is re-raised. A nested ``_overlap`` (x18's
+    ``_train_stage``) gives its threads the outer thunk's tag, so the
+    outer cancel reaches their jobs, and that inner call cancels its own
+    remaining siblings in turn.
+
     Scale note: this is not a local[32] trick — on a cluster the same
     overlap fills the idle tail of each iterative stage's last tasks
     with the sibling stage's work (guide §2.6's ThreadPoolExecutor
     pattern verbatim). Sizing: len(thunks) concurrent jobs, which is
-    2-4 at every call site — enough to fill stragglers, not enough to
+    2-5 at every call site — enough to fill stragglers, not enough to
     thrash the scheduler."""
+    import uuid
     from concurrent.futures import (
         FIRST_EXCEPTION,
         ThreadPoolExecutor,
         wait,
     )
 
+    from pyspark import SparkContext
+
     if len(thunks) == 1:
         return [thunks[0]()]
+    sc = SparkContext.getOrCreate()
+    inherited = set(sc.getJobTags())
+    call = uuid.uuid4().hex
+    tags = [f"overlap:{call}:{i}" for i in range(len(thunks))]
+
+    def run(thunk, tag):
+        for t in inherited | {tag}:
+            sc.addJobTag(t)
+        try:
+            return thunk()
+        finally:
+            sc.clearJobTags()
+
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        # fail fast (ADVICE r12): when one stage dies, don't let its
-        # corpus-scale siblings run to completion before re-raising —
-        # cancel what hasn't started and surface the first error now
-        # (running siblings still drain; Spark jobs are not
-        # interruptible mid-action without a job group, and these
-        # builders share the session's default group)
+        futures = [pool.submit(run, t, tag) for t, tag in zip(thunks, tags)]
         done, not_done = wait(futures, return_when=FIRST_EXCEPTION)
         first_err = next(
             (f.exception() for f in futures if f in done and f.exception()),
@@ -101,29 +104,14 @@ def _overlap(*thunks):
         if first_err is not None:
             for f in not_done:
                 f.cancel()
+            while not all(f.done() for f in futures):
+                for f, tag in zip(futures, tags):
+                    if not f.done():
+                        sc.cancelJobsWithTag(tag)
+                wait(futures, timeout=0.05)
             raise first_err
         return [f.result() for f in futures]
 
-
-def _probe(sink: "dict | None", name: str, df: DataFrame) -> None:
-    """Stage attribution for the LAZY fat x-queries (round 11 — VERDICT
-    r10 'What's wrong' #2: x08 became the suite's #5 cost with zero
-    stage_secs attribution, so its +5.9 s round-10 delta had to be
-    adjudicated by commit archaeology). These queries are single lazy
-    plans with no eager sections, so per-stage walls come from running
-    each component SUB-PLAN to the noop sink when a sink dict is passed
-    (bench.py's attribution pass only — the registry/driver path passes
-    no sink and this is a no-op). Column pruning cuts each probe to its
-    own component's expressions, but the probes share the scan, so
-    stage walls OVERLAP and do not partition 'execute' — they are
-    attribution hints for cross-round adjudication, not a sum."""
-    if sink is None:
-        return
-    import time
-
-    t0 = time.time()
-    df.write.format("noop").mode("overwrite").save()
-    sink[name] = round(time.time() - t0, 3)
 
 _TOKS_CTE = """
   SELECT DISTINCT doc_id, token FROM (
@@ -699,9 +687,7 @@ _SENT_DECO_SUFFIX = (
 )
 
 
-def x08_text_stats(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def x08_text_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Language ID (n-gram marker heuristic), quality scoring
     (length/punct/stopword components), document fingerprint (md5 of
     whitespace-normalized text) and raw whitespace/BPE-ish token counts
@@ -793,7 +779,7 @@ def x08_text_stats(
         .withColumn("_cdcuts", PK.cdc_cuts_col(F.col("_wgrams")))
     )
     # named column groups (order fixed — this IS the output schema
-    # order); the stage-attribution probes below reuse them verbatim
+    # order)
     html_moji_cols = [
         F.length("_stripped").cast("bigint").alias("html_stripped_len"),
         F.substring(F.md5("_stripped"), 1, 8).alias("html_fp8"),
@@ -833,28 +819,6 @@ def x08_text_stats(
         *TS.gopher_rules_cols(F.col("_gc"), _base=_gc_base),
         *TS.c4_rules_cols(F.col("_gc"), _base=_gc_base),
     ]
-    if _stage_secs is not None:
-        # bench attribution pass (VERDICT r10 #2): per-component
-        # sub-plan walls — column pruning cuts each probe to its own
-        # expressions (see _probe's overlap caveat)
-        _probe(
-            _stage_secs,
-            "base_stats",
-            TS.text_stats(
-                base, "doc_id", "text",
-                include_fingerprint=True, include_token_counts=True,
-            ),
-        )
-        for pname, pcols in [
-            ("html_moji", html_moji_cols),
-            ("tok_chunks", tok_chunk_cols),
-            ("sent_chunks", sent_chunk_cols),
-            ("entropy", entropy_cols),
-            ("winnow", winnow_cols),
-            ("cdc", cdc_cols),
-            ("gopher_c4", gc_cols),
-        ]:
-            _probe(_stage_secs, pname, base.select("doc_id", *pcols))
     stats = TS.text_stats(
         base,
         "doc_id",
@@ -874,7 +838,7 @@ def x08_text_stats(
     return stats.orderBy("doc_id")
 
 
-def _marker_sum(lang: str) -> str:
+def _lang_cue_sum(lang: str) -> str:
     terms = " + ".join(
         f"(CASE WHEN position(' {m} ' IN padded) > 0 THEN 1 ELSE 0 END)"
         for m in TS.LANG_MARKERS[lang]
@@ -885,10 +849,10 @@ def _marker_sum(lang: str) -> str:
 _X08_LANG_BODY = f"""
 WITH p AS (SELECT doc_id, ' ' || lower(text) || ' ' AS padded FROM documents),
 s AS (SELECT doc_id,
-             {_marker_sum('de')} AS s_de,
-             {_marker_sum('en')} AS s_en,
-             {_marker_sum('es')} AS s_es,
-             {_marker_sum('fr')} AS s_fr
+             {_lang_cue_sum('de')} AS s_de,
+             {_lang_cue_sum('en')} AS s_en,
+             {_lang_cue_sum('es')} AS s_es,
+             {_lang_cue_sum('fr')} AS s_fr
       FROM p),
 fold AS (SELECT doc_id, s_de, s_en, s_es, s_fr,
                 CASE WHEN s_fr > greatest(s_de, s_en, s_es) THEN 'fr'
@@ -1626,9 +1590,7 @@ def _feature_bytes_csv(col_name: str):
     )
 
 
-def x13_multimodal_pipeline(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def x13_multimodal_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     """meta → resize → decode → frame-sample over a binary media column;
     the metadata-only path (media_meta: codegen byte length + content
     hash, no decode) and a typed-metadata JSON extract join in alongside
@@ -1645,13 +1607,10 @@ def x13_multimodal_pipeline(
     # without the barrier each re-ran the resize pass over the media
     # bytes (round 13 — the multi-consumer barrier policy; tiny frame,
     # one row per media)
-    import time as _time
-
-    _t0 = _time.time()
-    resized = M.resize_media(media, 64, 64).select(
-        "media_id", "content", "mime"
-    ).localCheckpoint()
-    _mark(_stage_secs, "resize", _t0)
+    with stage(spark, "resize"):
+        resized = M.resize_media(media, 64, 64).select(
+            "media_id", "content", "mime"
+        ).localCheckpoint()
     decoded = M.decode_media(resized)
     frames = M.sample_frames(resized, max_frames=3)
     # round-10 zero-slot promotion: the spectral-audio family over the
@@ -1673,12 +1632,10 @@ def x13_multimodal_pipeline(
     # feature[1] = duration (exact — 2⁻⁵ vs 2⁻⁴ s), feature[2] = 6dp
     # rms, pinned at 1e-4 fixed point against the closed form
     # sqrt((A1² + A2²)/2)/32768 (amplitudes planted per row).
-    _t0 = _time.time()
-    prof = M.audio_profile(wav).localCheckpoint()
-    _mark(_stage_secs, "audio_profile", _t0)
-    _t0 = _time.time()
-    tph = M.audio_phash(twin).select("media_id", "phash").localCheckpoint()
-    _mark(_stage_secs, "twin_phash", _t0)
+    with stage(spark, "audio_profile"):
+        prof = M.audio_profile(wav).localCheckpoint()
+    with stage(spark, "twin_phash"):
+        tph = M.audio_phash(twin).select("media_id", "phash").localCheckpoint()
     # round-11 zero-slot promotion (VERDICT r10 #4): the near-dup
     # BANDING path itself — each planted row's REAL pigeonhole band
     # join + popcount verify (dedup.simhash_neardup_pairs, the exact
@@ -1751,26 +1708,6 @@ def x13_multimodal_pipeline(
             ),
         )
     )
-    if _stage_secs is not None:
-        # bench attribution pass (VERDICT r10 #2) — component sub-plan
-        # walls; overlap caveat on _probe. Since round 13 the audio
-        # decode cost lives in the eager audio_profile/twin_phash marks
-        # above; the audio_* probe keys are kept (only-added rule) but
-        # now time checkpoint reads, not decodes.
-        _probe(_stage_secs, "img_decode", decoded)
-        _probe(_stage_secs, "img_frames", frames)
-        _probe(_stage_secs, "meta_json", meta.join(k, "media_id"))
-        _probe(
-            _stage_secs, "audio_spectral",
-            prof.select("media_id", "spec_centroid_hz", "spec_bandwidth_hz",
-                        "spec_rolloff_hz", "spec_flatness", "dominant_hz"),
-        )
-        _probe(_stage_secs, "audio_td", prof.select("media_id", "feature"))
-        _probe(
-            _stage_secs,
-            "audio_phash",
-            prof.select("media_id", "phash").unionByName(tph),
-        )
     return (
         decoded.join(frames, "media_id")
         .join(meta, "media_id")
@@ -2219,9 +2156,7 @@ GROUP BY e.event_type ORDER BY e.event_type
 # float-summation noise therefore resolves identically everywhere,
 # while any real kernel regression ≥ 1e-4 still breaks the hash.
 
-def x18_ivf_topk(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def x18_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     """IVF probe-and-rescore: coarse-quantize the corpus into 16 cells
     (TRAINED — since round 7 the index comes from 3 quantized Lloyd
     rounds, see below), probe the 4 cells nearest each query,
@@ -2263,8 +2198,6 @@ def x18_ivf_topk(
     label propagation + pointer jumping, so the pin is cross-ALGORITHM
     too (the x31 cc_label recipe, now over DATA-derived float pairs
     rather than a planted integer graph)."""
-    import time
-
     emb = table(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
 
@@ -2275,9 +2208,8 @@ def x18_ivf_topk(
     # sf0.1); now brute-force truth overlaps the training, and the
     # three centroid consumers overlap each other (guide §2.6 via
     # _overlap — every stage is partitioning-invariant by the quantized
-    # contracts). stage_secs walls OVERLAP (the _probe caveat).
+    # contracts).
     def _train_stage():
-        t0 = time.time()
         # ONE quantized training serves everything below: the IVF
         # probes a genuinely TRAINED index (until round 7 the registry
         # IVF used lowest-id centroids because float training wasn't
@@ -2285,34 +2217,29 @@ def x18_ivf_topk(
         # that restriction, so the trained-IVF path is oracle-verified
         # END-TO-END), the same centroids cell the corpus for the
         # per-row columns, and SemDeDup pairs within the same cells.
-        cent = S.kmeans_centroids(emb, k=16, n_iters=3, quantize_dp=7)
-        _mark(_stage_secs, "kmeans_train", t0)
+        with stage(spark, "kmeans_train"):
+            cent = S.kmeans_centroids(emb, k=16, n_iters=3, quantize_dp=7)
 
         def _ivf_stage():
-            t1 = time.time()
             # localCheckpoint: multiple consumers (topk_eval, rrf_fuse,
             # the output join) — without the barrier every consumer
             # would re-execute the corpus-scale probe/rescore lineage.
             # Result-sized (queries x k rows).
-            approx = S.ivf_topk(
-                queries, emb, k=10, n_centroids=16, n_probe=4,
-                centroids=cent,
-            ).localCheckpoint()
-            _mark(_stage_secs, "ivf_probe", t1)
-            return approx
+            with stage(spark, "ivf_probe"):
+                return S.ivf_topk(
+                    queries, emb, k=10, n_centroids=16, n_probe=4,
+                    centroids=cent,
+                ).localCheckpoint()
 
         def _assign_stage():
-            t1 = time.time()
             # localCheckpoint: asg is consumed TWICE below (row side +
             # cell_n groupBy side of the self-join) — without it the
             # kmeans_assign mapInPandas pass re-executes over the
             # corpus per consumer (the x31 multi-consumer lesson)
-            asg = S.kmeans_assign(emb, cent).localCheckpoint()
-            _mark(_stage_secs, "assign", t1)
-            return asg
+            with stage(spark, "assign"):
+                return S.kmeans_assign(emb, cent).localCheckpoint()
 
         def _sem_stage():
-            t1 = time.time()
             # semantic_neardup_pairs re-assigns the corpus internally
             # rather than joining `asg` back: the assignment is one
             # NARROW broadcast-centroid Arrow pass (no exchange),
@@ -2320,23 +2247,20 @@ def x18_ivf_topk(
             # shuffle — recompute is the cheaper side of that trade at
             # every scale, and both run the same _argmax_cells kernel
             # so they cannot disagree
-            pairs = S.semantic_neardup_pairs(
-                emb, threshold=0.5, centroids=cent
-            )
-            comp = D.neardup_clusters(pairs).select(
-                F.col("id").alias("neighbor_id"),
-                F.col("cluster_id").alias("_sem"),
-            )
-            _mark(_stage_secs, "semdedup_cc", t1)
-            return comp
+            with stage(spark, "semdedup_cc"):
+                pairs = S.semantic_neardup_pairs(
+                    emb, threshold=0.5, centroids=cent
+                )
+                return D.neardup_clusters(pairs).select(
+                    F.col("id").alias("neighbor_id"),
+                    F.col("cluster_id").alias("_sem"),
+                )
 
         return cent, *_overlap(_ivf_stage, _assign_stage, _sem_stage)
 
     def _truth_stage():
-        t0 = time.time()
-        truth = S.cosine_topk(queries, emb, k=10).localCheckpoint()
-        _mark(_stage_secs, "brute_truth", t0)
-        return truth
+        with stage(spark, "brute_truth"):
+            return S.cosine_topk(queries, emb, k=10).localCheckpoint()
 
     (_cent, approx, asg, comp), truth = _overlap(
         _train_stage, _truth_stage
@@ -2893,9 +2817,7 @@ def _x24_frontier_url(did: Column) -> Column:
     )
 
 
-def x24_url_curation(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def x24_url_curation(spark: SparkSession, sf: str) -> DataFrame:
     docs = parallel_table(spark, sf, "documents")
     did = F.col("doc_id")
     aug = F.concat(
@@ -2998,19 +2920,6 @@ def x24_url_curation(
         domain_col="rdomain",
         agent="engine-bot",
     ).select("doc_id", F.lit(1).alias("robots_allowed"))
-    if _stage_secs is not None:
-        # bench attribution pass (VERDICT r10 #2) — component sub-plan
-        # walls; overlap caveat on _probe. The blocklist/domain-cap
-        # flags now live on the one flagged frame (keys kept: the
-        # blocklist/domain_cap probes time the flag sub-plans).
-        _probe(_stage_secs, "url_stats", stats)
-        _probe(_stage_secs, "blocklist", flagged.select("doc_id", "kept"))
-        _probe(_stage_secs, "frontier_dedup", surv)
-        _probe(
-            _stage_secs, "domain_cap",
-            flagged.select("doc_id", "domain_capped"),
-        )
-        _probe(_stage_secs, "robots", rallow)
     return (
         flagged
         # canonical_url is a pure codegen projection of doc_id (via the
@@ -3612,9 +3521,25 @@ ORDER BY doc_id
 # rounded (4dp float contract). The codes ship as a csv string because
 # the compare canonicalizes scalars, not arrays.
 
-def x27_quantize_embeddings(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def _x27_init_head(emb: DataFrame, k: int = 4):
+    """The k lowest-vec_id non-empty embeddings as a (k, dim) float64
+    array: exactly the init collect pq_train / ivfpq_train make when no
+    init_vecs is handed in (NULL and empty vectors dropped first)."""
+    import numpy as np
+
+    from ..functions.vectors import as_double
+
+    pdf = (
+        S._nonempty_vecs(emb, "embedding")
+        .select("vec_id", as_double("embedding").alias("v"))
+        .orderBy("vec_id")
+        .limit(k)
+        .toPandas()
+    )
+    return np.array(list(pdf["v"]), dtype="float64")
+
+
+def x27_quantize_embeddings(spark: SparkSession, sf: str) -> DataFrame:
     """Symmetric max-abs int8 quantization of the embedding column plus
     per-vector reconstruction RMSE — one narrow projection over the
     scan, zero data shuffle (operators/embeddings.py; parallel_table
@@ -3667,8 +3592,6 @@ def x27_quantize_embeddings(
     re-derives the coarse trainer (the x18 CTE shape at k=4),
     residuals, the residual-PQ trainer, the per-probed-cell LUTs and
     the serving rank — the full probe→residual-ADC→rank path."""
-    import time as _time
-
     import numpy as np
 
     from ..operators import pq as PQO
@@ -3682,37 +3605,29 @@ def x27_quantize_embeddings(
     # (ksub = n_centroids = 4, all defined as "the k lowest-id
     # vectors"). The baseline paid that TakeOrdered corpus pass three
     # times — once here for q0 and once inside each trainer; init_vecs
-    # hands the shared head in (the collect is exactly what each
-    # trainer's internal init collect would produce — as_double cast,
-    # vec_id order). q0 then seeds FOUR independent stage groups below
-    # (plain-PQ ADC, the OPQ Givens rotation's dimension, the MRL
+    # hands the shared head in (_x27_init_head: exactly the trainers'
+    # own init collect). q0 then seeds FOUR independent stage groups
+    # below (plain-PQ ADC, the OPQ Givens rotation's dimension, the MRL
     # prefix query, the IVFPQ probe), which run as concurrent jobs
     # (guide §2.6 via _overlap) — every trainer is partitioning-
     # invariant by the quantized contract, so results are
-    # bit-identical. stage_secs walls OVERLAP (the _probe caveat).
-    from ..functions.vectors import as_double as _as_double
-
-    _head_pdf = (
-        emb.select("vec_id", _as_double("embedding").alias("v"))
-        .orderBy("vec_id")
-        .limit(4)
-        .toPandas()
-    )
-    head = np.array(list(_head_pdf["v"]), dtype="float64")  # (4, dim)
+    # bit-identical.
+    head = _x27_init_head(emb)
     q0 = head[0]
 
     def _pq_stage():
-        t0 = _time.time()
-        cbooks = PQO.pq_train(emb, m=4, ksub=4, n_iters=2, init_vecs=head)
-        pqe = PQO.pq_encode(emb, cbooks, query_vec=q0).select(
-            "vec_id",
-            F.concat_ws(
-                ",", F.transform("pq_codes", lambda c: c.cast("string"))
-            ).alias("pq_codes_csv"),
-            "pq_rmse",
-            F.col("adc_fp").alias("pq_adc_fp"),
-        )
-        _mark(_stage_secs, "pq_train_encode", t0)
+        with stage(spark, "pq_train_encode"):
+            cbooks = PQO.pq_train(
+                emb, m=4, ksub=4, n_iters=2, init_vecs=head
+            )
+            pqe = PQO.pq_encode(emb, cbooks, query_vec=q0).select(
+                "vec_id",
+                F.concat_ws(
+                    ",", F.transform("pq_codes", lambda c: c.cast("string"))
+                ).alias("pq_codes_csv"),
+                "pq_rmse",
+                F.col("adc_fp").alias("pq_adc_fp"),
+            )
         # OPQ cross-moment pin (round-9, the pca_fit moment-pin
         # pattern): the orthogonal-Procrustes step consumes
         # A = (1/n)·Σ x·ŷᵀ (operators/pq.opq_cross_moment) — the SVD
@@ -3724,10 +3639,10 @@ def x27_quantize_embeddings(
         # diagonal entry and one planted off-diagonal
         # (j = (17·m+3) mod 64 — never m, and a bijection over
         # columns). Runs INSIDE this stage group: it needs cbooks.
-        t0 = _time.time()
-        a_mom = PQO.opq_cross_moment(
-            emb, np.eye(len(q0)), cbooks, moment_dp=9
-        )
+        with stage(spark, "opq_moment"):
+            a_mom = PQO.opq_cross_moment(
+                emb, np.eye(len(q0)), cbooks, moment_dp=9
+            )
         om_rows = [
             (
                 m,
@@ -3740,7 +3655,6 @@ def x27_quantize_embeddings(
             spark,
             om_rows, "m64o int, opq_xmom_ii double, opq_xmom_ij double"
         )
-        _mark(_stage_secs, "opq_moment", t0)
         return pqe, om
 
     # OPQ SERVING (round-10 zero-slot promotion — VERDICT r9 #5): the
@@ -3752,20 +3666,20 @@ def x27_quantize_embeddings(
     # quantized frame itself so both engines consume the identically
     # rounded values.
     def _opq_stage():
-        t0 = _time.time()
         rg = np.eye(len(q0))
         rg[0, 0], rg[0, 16], rg[16, 0], rg[16, 16] = 0.6, 0.8, -0.8, 0.6
-        vrq = PQO.rotate_vectors(emb, rg).withColumn(
-            "vr", F.transform("vr", lambda x: F.round(x, 9))
-        ).localCheckpoint()  # consumed by 2 Lloyd passes + the query
-        # collect + the encode — without the cut each re-runs the Arrow
-        # rotation pass over the corpus (round-10 review finding)
-        ocb = PQO.pq_train(vrq, vec_col="vr", m=4, ksub=4, n_iters=2)
-        oq0 = np.asarray(
-            vrq.orderBy("vec_id").limit(1).collect()[0]["vr"],
-            dtype="float64",
-        )
-        oenc = PQO.pq_encode(vrq, ocb, vec_col="vr", query_vec=oq0).select(
+        with stage(spark, "opq_serve"):
+            vrq = PQO.rotate_vectors(emb, rg).withColumn(
+                "vr", F.transform("vr", lambda x: F.round(x, 9))
+            ).localCheckpoint()  # consumed by 2 Lloyd passes + the query
+            # collect + the encode — without the cut each re-runs the
+            # Arrow rotation pass over the corpus (round-10 review finding)
+            ocb = PQO.pq_train(vrq, vec_col="vr", m=4, ksub=4, n_iters=2)
+            oq0 = np.asarray(
+                vrq.orderBy("vec_id").limit(1).collect()[0]["vr"],
+                dtype="float64",
+            )
+        return PQO.pq_encode(vrq, ocb, vec_col="vr", query_vec=oq0).select(
             "vec_id",
             F.concat_ws(
                 ",", F.transform("pq_codes", lambda c: c.cast("string"))
@@ -3773,8 +3687,7 @@ def x27_quantize_embeddings(
             F.col("pq_rmse").alias("opq_rmse"),
             F.col("adc_fp").alias("opq_adc_fp"),
         )
-        _mark(_stage_secs, "opq_serve", t0)
-        return oenc
+
     # Matryoshka prefix serving (round-9 zero-slot promotion —
     # operators/embeddings.truncate_dims + fixed_query_cosine, Kusupati
     # et al. 2022): every row carries mrl_sim_d16 (4dp cosine of the
@@ -3787,7 +3700,6 @@ def x27_quantize_embeddings(
     from ..operators.rank import bucketed_row_number as _brn
 
     def _mrl_stage():
-        t0 = _time.time()
         mrl = EB.fixed_query_cosine(
             emb.select("vec_id", "embedding"),
             "embedding",
@@ -3795,72 +3707,71 @@ def x27_quantize_embeddings(
             d=16,
             out_col="mrl_sim_d16",
         ).select("vec_id", "mrl_sim_d16")
-        mrl = _brn(
-            mrl.withColumn(
-                "_mk", -F.round(F.col("mrl_sim_d16") * 10000).cast("long")
-            ),
-            ["_mk"],
-            [F.col("_mk").asc(), F.col("vec_id").asc()],
-            "mrl_rank_d16",
-        ).drop("_mk")
-        _mark(_stage_secs, "mrl", t0)
-        return mrl
+        with stage(spark, "mrl"):
+            return _brn(
+                mrl.withColumn(
+                    "_mk", -F.round(F.col("mrl_sim_d16") * 10000).cast("long")
+                ),
+                ["_mk"],
+                [F.col("_mk").asc(), F.col("vec_id").asc()],
+                "mrl_rank_d16",
+            ).drop("_mk")
 
     # IVFPQ serving (round 9): train the real two-level index, then
     # index-derived columns for every row + the real served top-10 for
     # the lowest-vec_id query (rank-bounded by design — the registry
     # never materializes a corpus-sized result list)
     def _ivfpq_stage():
-        t0 = _time.time()
         # return_residuals: the trainer materializes the residual
         # projection ONCE (localCheckpoint inside ivfpq_train) and its
         # pq_train rounds and renc all consume that one frame —
         # the baseline re-derived the broadcast-Arrow residual pass
         # 3x inside the trainer and a 4th time here (round-12 measure:
         # this stage was 4.1 of x27's 12.8 s)
-        coarse, rcb, res = PQO.ivfpq_train(
-            emb, n_centroids=4, coarse_iters=2, m=4, ksub=4, pq_iters=2,
-            quantize_dp=7, return_residuals=True, init_vecs=head,
-        )
-        # keep_cols passes `cell` through the encode batch, so the
-        # per-row cell and the residual codes come from ONE scan of the
-        # checkpointed residual frame instead of two subtrees joined
-        # on vec_id (round-12 execute-plan trim)
-        renc = PQO.pq_encode(
-            res, rcb, id_col="vec_id", vec_col="residual",
-            keep_cols=("cell",),
-        ).select(
-            "vec_id",
-            F.col("cell").cast("int").alias("ivf_cell"),
-            F.concat_ws(
-                ",", F.transform("pq_codes", lambda c: c.cast("string"))
-            ).alias("ivfpq_codes_csv"),
-            F.col("pq_rmse").alias("ivfpq_rmse"),
-        )
-        # probe set of the fixed query — 2 cells of 4, driver-computed
-        # from the broadcastable index via the SAME helper ivfpq_topk
-        # serves with (pq.ivf_probe_cells, the shared 4dp/stable/
-        # lowest-cell contract), landing as a codegen isin (no join)
-        qn = q0 / (float(np.linalg.norm(q0)) or 1.0)
-        probed = [
-            int(c) for c in PQO.ivf_probe_cells(qn[None, :], coarse, 2)[0]
-        ]
-        serv = PQO.ivfpq_topk(
-            emb.orderBy("vec_id").limit(1), emb, coarse, rcb, k=10,
-            n_probe=2,
-        ).select(
-            F.col("neighbor_id").alias("vec_id"),
-            F.col("adc_fp").alias("ivfpq_adc_fp"),
-            F.col("rank").alias("ivfpq_rank"),
-        )
-        _mark(_stage_secs, "ivfpq_train_serve", t0)
+        with stage(spark, "ivfpq_train_serve"):
+            coarse, rcb, res = PQO.ivfpq_train(
+                emb, n_centroids=4, coarse_iters=2, m=4, ksub=4, pq_iters=2,
+                quantize_dp=7, return_residuals=True, init_vecs=head,
+            )
+            # keep_cols passes `cell` through the encode batch, so the
+            # per-row cell and the residual codes come from ONE scan of
+            # the checkpointed residual frame instead of two subtrees
+            # joined on vec_id (round-12 execute-plan trim)
+            renc = PQO.pq_encode(
+                res, rcb, id_col="vec_id", vec_col="residual",
+                keep_cols=("cell",),
+            ).select(
+                "vec_id",
+                F.col("cell").cast("int").alias("ivf_cell"),
+                F.concat_ws(
+                    ",", F.transform("pq_codes", lambda c: c.cast("string"))
+                ).alias("ivfpq_codes_csv"),
+                F.col("pq_rmse").alias("ivfpq_rmse"),
+            )
+            # probe set of the fixed query — 2 cells of 4, driver-
+            # computed from the broadcastable index via the SAME helper
+            # ivfpq_topk serves with (pq.ivf_probe_cells, the shared
+            # 4dp/stable/lowest-cell contract), landing as a codegen
+            # isin (no join)
+            qn = q0 / (float(np.linalg.norm(q0)) or 1.0)
+            probed = [
+                int(c) for c in PQO.ivf_probe_cells(qn[None, :], coarse, 2)[0]
+            ]
+            serv = PQO.ivfpq_topk(
+                emb.orderBy("vec_id").limit(1), emb, coarse, rcb, k=10,
+                n_probe=2,
+            ).select(
+                F.col("neighbor_id").alias("vec_id"),
+                F.col("adc_fp").alias("ivfpq_adc_fp"),
+                F.col("rank").alias("ivfpq_rank"),
+            )
         return renc, probed, serv
 
     def _pca_stage():
-        t0 = _time.time()
-        mean, cov, _comps = EB.pca_fit(
-            emb, "embedding", k=4, moment_dp=9, return_moments=True
-        )
+        with stage(spark, "pca_moments"):
+            mean, cov, _comps = EB.pca_fit(
+                emb, "embedding", k=4, moment_dp=9, return_moments=True
+            )
         pm_rows = [
             (
                 m,
@@ -3875,7 +3786,6 @@ def x27_quantize_embeddings(
             pm_rows,
             "m64 int, pca_mean_i double, pca_var_i double, pca_cov_ij double",
         )
-        _mark(_stage_secs, "pca_moments", t0)
         return pm
 
     (pqe, om), oenc, mrl, (renc, probed, serv), pm = _overlap(
@@ -4398,9 +4308,7 @@ _X28_BPE_MERGES: list[tuple[str, str]] = [
 ]
 
 
-def x28_lm_perplexity(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def x28_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
     """Per-document bigram-LM perplexity, model self-trained on the
     corpus: one gram census (train) + one gram→model join (score);
     model tables vocab²-bounded, never the corpus again
@@ -4422,11 +4330,8 @@ def x28_lm_perplexity(
     # ONE tokenize+explode pass for train AND score: the gram stream is
     # materialized once (localCheckpoint) and shared — without it both
     # halves re-run the scan+regex pipeline independently
-    import time as _time
-
-    _t = _time.time()
-    grams = RV.doc_bigrams(docs, "doc_id", "text").localCheckpoint()
-    _t = _mark(_stage_secs, "gram_census", _t)
+    with stage(spark, "gram_census"):
+        grams = RV.doc_bigrams(docs, "doc_id", "text").localCheckpoint()
     # Stage dependency graph after the shared gram checkpoint: the
     # add-k LM (+ its perplexity/buckets/Moore-Lewis consumers), the
     # Kneser-Ney LM, and the word-census tokenizer-trainer family are
@@ -4435,27 +4340,26 @@ def x28_lm_perplexity(
     # to back (addk_kn_lm 3.3 + moore_lewis 0.9 + word_census 0.8 s at
     # sf0.1). Submit them as concurrent jobs (guide §2.6 via _overlap);
     # every model table is a pure function of the census row set, so
-    # results are bit-identical. stage_secs walls now OVERLAP (the
-    # _probe caveat); the KN half of the old combined "addk_kn_lm" key
-    # lands under the new "kn_lm" key.
+    # results are bit-identical.
     def _addk_ml_stage():
-        t0 = _time.time()
-        lm, ctx, v = RV.train_bigram_lm(
-            docs, "doc_id", "text", add_k=0.5, grams=grams
-        )
-        ppl = RV.lm_perplexity(
-            docs, lm, ctx, v, "doc_id", "text", backoff=False, grams=grams
-        )
-        # CCNet head/middle/tail (round-9 zero-slot promotion —
-        # relevance.ppl_buckets, Wenzek et al. 2020): every doc carries
-        # its global perplexity rank and its tercile under the add-k
-        # model. Rank comes from the skew-proof bucketed row_number (no
-        # SinglePartition corpus pass), the bucket from the exact
-        # integer (rank−1)·3 div total — both cross-engine hashable.
-        ppl = ppl.localCheckpoint()  # consumed by the bucket rank AND
-        # the Moore-Lewis reuse AND the output join
-        buckets = RV.ppl_buckets(ppl, "doc_id", "ppl", n_buckets=3)
-        _mark(_stage_secs, "addk_kn_lm", t0)
+        with stage(spark, "addk_kn_lm"):
+            lm, ctx, v = RV.train_bigram_lm(
+                docs, "doc_id", "text", add_k=0.5, grams=grams
+            )
+            ppl = RV.lm_perplexity(
+                docs, lm, ctx, v, "doc_id", "text", backoff=False,
+                grams=grams,
+            )
+            # CCNet head/middle/tail (round-9 zero-slot promotion —
+            # relevance.ppl_buckets, Wenzek et al. 2020): every doc
+            # carries its global perplexity rank and its tercile under
+            # the add-k model. Rank comes from the skew-proof bucketed
+            # row_number (no SinglePartition corpus pass), the bucket
+            # from the exact integer (rank−1)·3 div total — both
+            # cross-engine hashable.
+            ppl = ppl.localCheckpoint()  # consumed by the bucket rank
+            # AND the Moore-Lewis reuse AND the output join
+            buckets = RV.ppl_buckets(ppl, "doc_id", "ppl", n_buckets=3)
         # Moore-Lewis cross-entropy-difference selection (round-10
         # zero-slot promotion — relevance.moore_lewis_scores, Moore &
         # Lewis ACL 2010): in-domain = source 'src0' (the x32 DSIR
@@ -4465,12 +4369,11 @@ def x28_lm_perplexity(
         # aggregation over the src0 subset, OOV grams take the backoff
         # floor. ml_excess_fp is the exact 1e-4 fixed-point difference
         # of the two integer-mean logps.
-        t0 = _time.time()
-        ml = RV.moore_lewis_scores(
-            docs, "doc_id", "text", F.col("source") == "src0",
-            grams=grams, general=(lm, ctx, v), general_scored=ppl,
-        ).select("doc_id", "ml_excess_fp")
-        _mark(_stage_secs, "moore_lewis", t0)
+        with stage(spark, "moore_lewis"):
+            ml = RV.moore_lewis_scores(
+                docs, "doc_id", "text", F.col("source") == "src0",
+                grams=grams, general=(lm, ctx, v), general_scored=ppl,
+            ).select("doc_id", "ml_excess_fp")
         return ppl, buckets, ml
 
     # KNESER-NEY promotion (round 9, zero slots): the same gram stream
@@ -4482,20 +4385,19 @@ def x28_lm_perplexity(
     # self-scored reason as ppl (the backoff arm is DuckDB-pinned on a
     # held-out split in tests/test_relevance.py).
     def _kn_stage():
-        t0 = _time.time()
-        knlm, knctx, kncont, knt, knv = RV.train_bigram_lm_kn(
-            docs, "doc_id", "text", discount=0.75, cont_k=0.5, grams=grams
-        )
-        knppl = RV.lm_perplexity_kn(
-            docs, knlm, knctx, kncont, knt, knv, "doc_id", "text",
-            backoff=False, grams=grams,
-        ).select(
-            "doc_id",
-            F.col("avg_logp").alias("kn_avg_logp"),
-            F.col("ppl").alias("kn_ppl"),
-        )
-        _mark(_stage_secs, "kn_lm", t0)
-        return knppl
+        with stage(spark, "kn_lm"):
+            knlm, knctx, kncont, knt, knv = RV.train_bigram_lm_kn(
+                docs, "doc_id", "text", discount=0.75, cont_k=0.5,
+                grams=grams,
+            )
+            return RV.lm_perplexity_kn(
+                docs, knlm, knctx, kncont, knt, knv, "doc_id", "text",
+                backoff=False, grams=grams,
+            ).select(
+                "doc_id",
+                F.col("avg_logp").alias("kn_avg_logp"),
+                F.col("ppl").alias("kn_ppl"),
+            )
 
     from ..functions.text import tokens_array
 
@@ -4518,10 +4420,9 @@ def x28_lm_perplexity(
     )
 
     def _wtypes_stage():
-        t0 = _time.time()
-        wtypes = words.select("word").distinct().localCheckpoint()
-        _mark(_stage_secs, "word_types", t0)
-        return wtypes
+        with stage(spark, "word_types"):
+            return words.select("word").distinct().localCheckpoint()
+
     # BPE TRAINING (round-7 zero-slot promotion — the x33/x31 recipe
     # applied to the tokenizer trainer): train_bpe learns 8 merges from
     # the corpus word census (freq-DESC/word-ASC truncation, count ties
@@ -4542,20 +4443,17 @@ def x28_lm_perplexity(
     # family is the third concurrent stage group (driver-side after
     # the one census collect).
     def _trainers_stage():
-        t0 = _time.time()
-        _census_rows = BP.word_census(docs, "text", 4096).collect()
+        with stage(spark, "word_census"):
+            _census_rows = BP.word_census(docs, "text", 4096).collect()
         shared_census = [(r["word"], int(r["freq"])) for r in _census_rows]
-        t0 = _mark(_stage_secs, "word_census", t0)
         merges, _alpha = BP.train_bpe(docs, "text", num_merges=8,
                                       max_word_types=4096,
                                       census=shared_census)
-        t0 = _mark(_stage_secs, "bpe_train", t0)
         return shared_census, merges
 
     (ppl, buckets, ml), knppl, (shared_census, merges), wtypes = _overlap(
         _addk_ml_stage, _kn_stage, _trainers_stage, _wtypes_stage
     )
-    _t = _time.time()
     enc = BP.encode_word_types(wtypes, _X28_BPE_MERGES).select(
         "word", F.size("pieces").cast("bigint").alias("_np")
     )
@@ -4602,7 +4500,6 @@ def x28_lm_perplexity(
     enc_w = WP.encode_word_types_wp(wtypes, wp_vocab).select(
         "word", F.size("pieces").cast("bigint").alias("_nw")
     )
-    _t = _mark(_stage_secs, "wp_train", _t)
     uni = UG.train_unigram(
         docs, "text", vocab_size=12, n_rounds=2, max_piece_len=4,
         seed_size=64, max_word_types=4096, census=shared_census,
@@ -4624,7 +4521,6 @@ def x28_lm_perplexity(
     enc_u = UG.unigram_encode_word_types(wtypes, uni).select(
         "word", F.size("pieces").cast("bigint").alias("_nu")
     )
-    _t = _mark(_stage_secs, "unigram_em", _t)
     # ONE per-word piece-count table for all four families (each
     # encoder emits exactly one row per input word type, so the
     # word-keyed inner joins are lossless), then ONE corpus join + ONE
@@ -4671,7 +4567,6 @@ def x28_lm_perplexity(
         "uni_fert_fp": _s_uni * 1_000_000 // _tot if _tot else 0,
         "wp_fert_fp": _s_wp * 1_000_000 // _tot if _tot else 0,
     }
-    _t = _mark(_stage_secs, "fertility", _t)
     return (
         ppl.join(buckets, "doc_id", "left")
         .join(knppl, "doc_id", "left")
@@ -5392,9 +5287,7 @@ ORDER BY term
 
 # --- x31 PageRank over a planted link graph ----------------------------------
 
-def x31_pagerank(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def x31_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     """Iterative PageRank (operators/graph.py) hash-matched against an
     independent DuckDB unrolled power iteration — the registry promotion
     the round-5 verdict asked for (the operator was previously pinned
@@ -5419,27 +5312,24 @@ def x31_pagerank(
     re-derives it independently via a recursive-CTE transitive closure,
     not label propagation, so the pin is cross-ALGORITHM as well as
     cross-engine."""
-    import time as _time
-
     from ..operators import graph as G
 
-    _t = _time.time()
     docs = parallel_table(spark, sf, "documents")
-    edges = (
-        docs.select(
-            (F.col("doc_id") % 97).alias("src"),
-            ((F.col("doc_id") * 31 + 7) % 97).alias("dst"),
+    with stage(spark, "edges"):
+        edges = (
+            docs.select(
+                (F.col("doc_id") % 97).alias("src"),
+                ((F.col("doc_id") * 31 + 7) % 97).alias("dst"),
+            )
+            .filter((F.col("src") != F.col("dst")) & (F.col("src") % 7 != 0))
+            .distinct()
+            # both consumers below (connected components AND pagerank) walk
+            # this frame many times across their iterative rounds — cut the
+            # lineage ONCE so the corpus scan + distinct executes once, not
+            # once per consumer (the x32 builder learned this from x31; now
+            # x31 practices it too).
+            .localCheckpoint()
         )
-        .filter((F.col("src") != F.col("dst")) & (F.col("src") % 7 != 0))
-        .distinct()
-        # both consumers below (connected components AND pagerank) walk
-        # this frame many times across their iterative rounds — cut the
-        # lineage ONCE so the corpus scan + distinct executes once, not
-        # once per consumer (the x32 builder learned this from x31; now
-        # x31 practices it too).
-        .localCheckpoint()
-    )
-    _t = _mark(_stage_secs, "edges", _t)
 
     # The three iterative algorithms below are INDEPENDENT consumers of
     # the one checkpointed edge table, but each runs many small eager
@@ -5448,24 +5338,21 @@ def x31_pagerank(
     # stage_secs: components 5.9 + pagerank 4.7 + hits 4.5). Submit
     # them as concurrent jobs instead (guide §2.6 via _overlap); each
     # result is bit-identical by the quantize_dp contract regardless of
-    # scheduling. stage_secs walls now OVERLAP (the _probe caveat).
+    # scheduling.
     def _cc_stage():
-        t0 = _time.time()
-        cc = D.neardup_clusters(
-            edges.select(
-                F.col("src").alias("id_a"), F.col("dst").alias("id_b")
+        with stage(spark, "components"):
+            return D.neardup_clusters(
+                edges.select(
+                    F.col("src").alias("id_a"), F.col("dst").alias("id_b")
+                )
+            ).select(
+                F.col("id").alias("node"),
+                F.col("cluster_id").alias("cc_label"),
             )
-        ).select(
-            F.col("id").alias("node"), F.col("cluster_id").alias("cc_label")
-        )
-        _mark(_stage_secs, "components", t0)
-        return cc
 
     def _pr_stage():
-        t0 = _time.time()
-        ranks = G.pagerank(edges, damping=0.85, n_iters=10, quantize_dp=10)
-        _mark(_stage_secs, "pagerank", t0)
-        return ranks
+        with stage(spark, "pagerank"):
+            return G.pagerank(edges, damping=0.85, n_iters=10, quantize_dp=10)
 
     # HITS (round-9 zero-slot promotion — operators/graph.hits,
     # Kleinberg 1999): 5 hub↔authority rounds over the SAME planted
@@ -5476,10 +5363,8 @@ def x31_pagerank(
     # none: their hub is structurally 0 while their auth is positive —
     # the role separation PageRank conflates, pinned per row.
     def _hits_stage():
-        t0 = _time.time()
-        hub_auth = G.hits(edges, n_iters=5, quantize_dp=10)
-        _mark(_stage_secs, "hits", t0)
-        return hub_auth
+        with stage(spark, "hits"):
+            return G.hits(edges, n_iters=5, quantize_dp=10)
 
     cc, ranks, hub_auth = _overlap(_cc_stage, _pr_stage, _hits_stage)
     return ranks.join(cc, "node").join(hub_auth, "node").orderBy("node")
@@ -5588,9 +5473,7 @@ X31_SQL = _x31_oracle_sql()
 
 # --- x32 mixture construction: token budget + epoch upsampling + DSIR --------
 
-def x32_sampling(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def x32_sampling(spark: SparkSession, sf: str) -> DataFrame:
     """The mixture-construction stages a curation user touches on day
     one (operators/sampling.py), registry-promoted in round 6 (slot
     freed by folding q26's pivot into q25): token_budget_filter fills
@@ -5634,8 +5517,6 @@ def x32_sampling(
     own-domain CEs and both mixture-CE → update → renormalize rounds
     as MATERIALIZED CTEs, and the weight lands on the mixed rows as a
     codegen CASE (no join — S driver scalars)."""
-    import time as _time
-
     docs = parallel_table(spark, sf, "documents")
     s = docs.select(
         "doc_id",
@@ -5652,93 +5533,90 @@ def x32_sampling(
     # stage_secs: budget_mix_strat 2.0 + dsir 3.2 + doremi 2.7).
     # Submit them as concurrent jobs (guide §2.6 via _overlap); every
     # decision inside each group is integer/md5/quantized arithmetic —
-    # a pure function of the row set, scheduling-invariant. stage_secs
-    # walls now OVERLAP (the _probe caveat). `total` is computed first
-    # (one tiny agg) because both the budget chain and UniMax consume
-    # it.
+    # a pure function of the row set, scheduling-invariant. `total`
+    # is computed first (one tiny agg) because both the budget chain
+    # and UniMax consume it.
     total = s.agg(F.sum("n_tokens")).collect()[0][0]
 
     def _mix_stage():
-        t0 = _time.time()
         budget = int(total * 0.35)
-        kept = SP.token_budget_filter(s, "score", "n_tokens", budget)
-        mixed = SP.epoch_upsample(
-            kept,
-            "source",
-            "doc_id",
-            {"src0": 2.3, "src1": 0.5, "src2": 1.7, "src3": 1.0},
-            default_weight=1.0,
-        )
-        # temperature_mix membership as a COLUMN (zero-slot promotion,
-        # the x24 pattern): run the real operator over the mixed rows
-        # at alpha=0.5 — n^(-1/2) is one correctly-rounded IEEE sqrt +
-        # one divide, so the driver-computed rate literals match the
-        # oracle's re-derivation bit-for-bit (a general alpha's pow()
-        # is libm-dependent; 0.5 keeps the whole construction exact).
-        # Checkpoint first: the operator's census collect and the flag
-        # join would otherwise each re-run the budget-filter chain.
-        mixed = mixed.localCheckpoint().withColumn(
-            "_mk", F.concat_ws(":", F.col("doc_id"), F.col("epoch"))
-        )
-        tm = SP.temperature_mix(mixed, "source", "_mk", alpha=0.5).select(
-            "_mk", F.lit(True).alias("mix_kept")
-        )
-        mixed = mixed.join(tm, "_mk", "left").withColumn(
-            "mix_kept", F.coalesce("mix_kept", F.lit(False))
-        )
-        # stratified_sample membership (round-8 zero-slot promotion,
-        # the mix_kept pattern): EXACT per-source sampling — every
-        # source keeps exactly ceil(0.4·n_source) of the mixed rows,
-        # ranked by md5('strat:'+key) with key tiebreak. All-integer/
-        # string decisions (md5 hex order + a ceil on an integer
-        # count), so DuckDB re-derives the rank, the quota and every
-        # membership bit exactly.
-        st = SP.stratified_sample(mixed, "source", "_mk", 0.4).select(
-            "_mk", F.lit(True).alias("strat_kept")
-        )
-        mixed = mixed.join(st, "_mk", "left").withColumn(
-            "strat_kept", F.coalesce("strat_kept", F.lit(False))
-        )
-        # curriculum_interleave (round-7 zero-slot promotion): the
-        # global training-order position of each (doc, epoch) row —
-        # within-source rank by (epoch ASC, score DESC, doc_id)
-        # interleaved round-robin across sources as pure integer
-        # arithmetic, no global sort. epoch_col (not a tiebreak): each
-        # epoch is a complete best-first pass over its source, so a
-        # doc's replicas sit a whole source-epoch apart instead of
-        # back-to-back. The score is integer-valued n_chars, so the
-        # rank order is tie-exact across engines.
-        mixed = SP.curriculum_interleave(
-            mixed, "score", "source", epoch_col="epoch"
-        )
-        _mark(_stage_secs, "budget_mix_strat", t0)
+        with stage(spark, "budget_mix_strat"):
+            kept = SP.token_budget_filter(s, "score", "n_tokens", budget)
+            mixed = SP.epoch_upsample(
+                kept,
+                "source",
+                "doc_id",
+                {"src0": 2.3, "src1": 0.5, "src2": 1.7, "src3": 1.0},
+                default_weight=1.0,
+            )
+            # temperature_mix membership as a COLUMN (zero-slot promotion,
+            # the x24 pattern): run the real operator over the mixed rows
+            # at alpha=0.5 — n^(-1/2) is one correctly-rounded IEEE sqrt +
+            # one divide, so the driver-computed rate literals match the
+            # oracle's re-derivation bit-for-bit (a general alpha's pow()
+            # is libm-dependent; 0.5 keeps the whole construction exact).
+            # Checkpoint first: the operator's census collect and the flag
+            # join would otherwise each re-run the budget-filter chain.
+            mixed = mixed.localCheckpoint().withColumn(
+                "_mk", F.concat_ws(":", F.col("doc_id"), F.col("epoch"))
+            )
+            tm = SP.temperature_mix(mixed, "source", "_mk", alpha=0.5).select(
+                "_mk", F.lit(True).alias("mix_kept")
+            )
+            mixed = mixed.join(tm, "_mk", "left").withColumn(
+                "mix_kept", F.coalesce("mix_kept", F.lit(False))
+            )
+            # stratified_sample membership (round-8 zero-slot promotion,
+            # the mix_kept pattern): EXACT per-source sampling — every
+            # source keeps exactly ceil(0.4·n_source) of the mixed rows,
+            # ranked by md5('strat:'+key) with key tiebreak. All-integer/
+            # string decisions (md5 hex order + a ceil on an integer
+            # count), so DuckDB re-derives the rank, the quota and every
+            # membership bit exactly.
+            st = SP.stratified_sample(mixed, "source", "_mk", 0.4).select(
+                "_mk", F.lit(True).alias("strat_kept")
+            )
+            mixed = mixed.join(st, "_mk", "left").withColumn(
+                "strat_kept", F.coalesce("strat_kept", F.lit(False))
+            )
+            # curriculum_interleave (round-7 zero-slot promotion): the
+            # global training-order position of each (doc, epoch) row —
+            # within-source rank by (epoch ASC, score DESC, doc_id)
+            # interleaved round-robin across sources as pure integer
+            # arithmetic, no global sort. epoch_col (not a tiebreak): each
+            # epoch is a complete best-first pass over its source, so a
+            # doc's replicas sit a whole source-epoch apart instead of
+            # back-to-back. The score is integer-valued n_chars, so the
+            # rank order is tie-exact across engines.
+            mixed = SP.curriculum_interleave(
+                mixed, "score", "source", epoch_col="epoch"
+            )
         return mixed
 
     def _dsir_stage():
-        t0 = _time.time()
-        raw = docs.filter(F.col("text").isNotNull())
-        # fused fit+score (round 13, guide §2.4 / VERDICT r12 #3): the
-        # ratio fit and the probe share ONE staged (id, bucket) feature
-        # stream instead of each re-running the corpus tokenize+explode
-        # — scores are bit-equal to the two-call composition (pinned in
-        # test_sampling), halving the dominant explode CPU at scale
-        _ratios, scored = SP.dsir_fit_scores(
-            raw, "doc_id", "text", n_buckets=4096,
-            target_filter=F.col("source") == "src0",
-        )
-        # scored is tiny (one row per doc) but its lineage re-probes
-        # the staged stream; localCheckpoint so count/min-max/histogram/
-        # filter/join all reuse one materialization (the x31 pattern)
-        scored = scored.localCheckpoint()
-        # floor at 1 (both sides — the oracle uses greatest(n//3, 1)):
-        # with fewer than 3 scored docs an unfloored n_keep of 0 would
-        # make dsir_resample raise while the SQL quietly returns
-        # kept=false rows
-        n_keep = max(scored.count() // 3, 1)
-        sel = SP.dsir_resample(
-            scored, "doc_id", "dsir_score", n_keep
-        ).select("doc_id", F.lit(True).alias("dsir_kept"))
-        _mark(_stage_secs, "dsir", t0)
+        with stage(spark, "dsir"):
+            raw = docs.filter(F.col("text").isNotNull())
+            # fused fit+score (round 13, guide §2.4 / VERDICT r12 #3): the
+            # ratio fit and the probe share ONE staged (id, bucket) feature
+            # stream instead of each re-running the corpus tokenize+explode
+            # — scores are bit-equal to the two-call composition (pinned in
+            # test_sampling), halving the dominant explode CPU at scale
+            _ratios, scored = SP.dsir_fit_scores(
+                raw, "doc_id", "text", n_buckets=4096,
+                target_filter=F.col("source") == "src0",
+            )
+            # scored is tiny (one row per doc) but its lineage re-probes
+            # the staged stream; localCheckpoint so count/min-max/histogram/
+            # filter/join all reuse one materialization (the x31 pattern)
+            scored = scored.localCheckpoint()
+            # floor at 1 (both sides — the oracle uses greatest(n//3, 1)):
+            # with fewer than 3 scored docs an unfloored n_keep of 0 would
+            # make dsir_resample raise while the SQL quietly returns
+            # kept=false rows
+            n_keep = max(scored.count() // 3, 1)
+            sel = SP.dsir_resample(
+                scored, "doc_id", "dsir_score", n_keep
+            ).select("doc_id", F.lit(True).alias("dsir_kept"))
         return scored, sel
 
     # DoReMi mixture weights (round-9 zero-slot promotion): the SIXTH
@@ -5753,9 +5631,8 @@ def x32_sampling(
     # codegen CASE over the driver dict — no join, the weights are S
     # scalars.
     def _doremi_stage():
-        t0 = _time.time()
-        dw, _hist = SP.doremi_weights(docs, "source", "text", n_rounds=2)
-        _mark(_stage_secs, "doremi", t0)
+        with stage(spark, "doremi"):
+            dw, _hist = SP.doremi_weights(docs, "source", "text", n_rounds=2)
         return dw
 
     mixed, (scored, sel), dw = _overlap(
@@ -5770,7 +5647,6 @@ def x32_sampling(
                    F.coalesce(F.col("dsir_kept"), F.lit(False))),
         )
     )
-    _t = _time.time()
     wexpr = F.lit(None).cast("double")
     for _src in sorted(dw):
         wexpr = F.when(F.col("source") == _src, F.lit(dw[_src])).otherwise(
@@ -5789,7 +5665,6 @@ def x32_sampling(
     # a broadcast dim onto the mixed rows.
     um = SP.unimax_allocation(s, "source", "n_tokens",
                               (19 * total) // 10, 2)
-    _t = _mark(_stage_secs, "unimax", _t)
     enriched = enriched.join(
         F.broadcast(
             um.select(

@@ -184,6 +184,7 @@ SLOW_TESTS = frozenset((
     "test_x28_moore_lewis_column_nondegenerate",  # 5.0s
     "test_x28_unigram_columns_nondegenerate",  # 6.2s
     "test_x28_wp_columns_nondegenerate_and_distinct_from_bpe",  # 5.8s
+    "test_x31_stage_record_is_complete",  # 24.6s (4-core box, cold)
 ))
 
 

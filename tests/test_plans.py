@@ -246,6 +246,17 @@ def test_plan_guard_passes_shipped_queries(spark, sf_dir):
         assert not violations, f"{name}: {violations}"
 
 
+def test_plan_guard_passes_q19_large_join(spark, sf_dir):
+    """One shipped query through the default guard in the default run
+    (the whole-registry sweep above is in the slow set): lineitem ⋈
+    orders, two large sides, where a nested-loop or cartesian fallback
+    would show."""
+    from mapreduce_stockheadlines_spark.plans.guard import check_plan
+
+    df = ALL_QUERIES["q19_large_join"].builder(spark, sf_dir)
+    assert check_plan(df) == []
+
+
 def test_plan_guard_catches_staged_hof_inlining(spark, sf_dir):
     """VERDICT r11 #1: the staged-HOF pushdown-inlining trap as
     machinery. A predicate on a staged expensive-HOF column gets pushed

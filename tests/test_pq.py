@@ -137,6 +137,40 @@ def test_pq_train_validates_inputs(spark):
         PQ.pq_train(df.filter("vec_id < 2"), m=2, ksub=4, n_iters=1)
 
 
+def test_x27_init_head_skips_null_and_empty_vectors(spark):
+    """x27 collects the corpus head once and hands it to pq_train and
+    ivfpq_train as init_vecs, which must be exactly their internal init
+    collect: NULL and empty vectors dropped, then the 4 lowest vec_ids.
+    Here a NULL and an empty vector hold two of the 4 lowest vec_ids."""
+    from mapreduce_stockheadlines_spark.operators.similarity import (
+        kmeans_centroids,
+    )
+    from mapreduce_stockheadlines_spark.plans.extensions import _x27_init_head
+
+    from mapreduce_stockheadlines_spark.session import local_table
+
+    rows = _clustered(np.random.RandomState(5), n_per=5)
+    df = local_table(
+        spark,
+        [(0, None), (1, [])]
+        + [(i + 2, [float(x) for x in v]) for i, v in rows],
+        "vec_id long, embedding array<double>",
+    )
+    head = _x27_init_head(df)
+    np.testing.assert_array_equal(
+        head, np.array([v for _, v in sorted(rows)[:4]], dtype="float64")
+    )
+    # the two consumers: plain PQ, and the IVFPQ coarse quantizer
+    np.testing.assert_array_equal(
+        PQ.pq_train(df, m=2, ksub=4, n_iters=1, init_vecs=head),
+        PQ.pq_train(df, m=2, ksub=4, n_iters=1),
+    )
+    np.testing.assert_array_equal(
+        kmeans_centroids(df, k=4, n_iters=1, quantize_dp=7, init_vecs=head),
+        kmeans_centroids(df, k=4, n_iters=1, quantize_dp=7),
+    )
+
+
 def test_x27_pq_columns_nondegenerate(spark, sf_dir):
     """Promotion guard (VERDICT r7 #8) for the round-8 x27 zero slots:
     the PQ code/distance columns must vary at the test SF, or the
